@@ -707,7 +707,10 @@ object Relational {
       .agg(sum(col("n")).as("n"), sum(col("q")).as("q"))
       .select(lit(null).cast("string").as("l_returnflag"), col("l_linestatus"),
         col("n"), col("q"))
-    val total = base.agg(sum(col("n")).as("n"), sum(col("q")).as("q"))
+    // an empty table's grand total counts 0 rows (GROUP BY CUBE's n),
+    // while its quantity sum stays NULL
+    val total = base.agg(coalesce(sum(col("n")), lit(0L)).as("n"),
+      sum(col("q")).as("q"))
       .select(lit(null).cast("string").as("l_returnflag"),
         lit(null).cast("string").as("l_linestatus"), col("n"), col("q"))
     base.select(col("l_returnflag"), col("l_linestatus"), col("n"), col("q"))
@@ -1040,7 +1043,8 @@ object Relational {
         lit("<all>").as("lstatus"), lit(0).as("g_rflag"),
         lit(1).as("g_lstatus"), col("n"), col("price_cents"))
     val total = base
-      .agg(sum(col("n")).as("n"), sum(col("price_cents")).as("price_cents"))
+      .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
+        sum(col("price_cents")).as("price_cents"))
       .select(lit("<all>").as("rflag"), lit("<all>").as("lstatus"),
         lit(1).as("g_rflag"), lit(1).as("g_lstatus"),
         col("n"), col("price_cents"))
@@ -1644,8 +1648,8 @@ object Relational {
     * value-deterministic. Self-loops retained here: pagerank keeps
     * them, triangles filters them — callers apply their own policy. */
   private[graft] def graphRawEdges(spark: SparkSession, sfDir: String): DataFrame =
-    Flow.sharedTableOf(spark, s"graph_edges:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/lineitem.parquet")) {
+    graft.Artifact.table(spark, "graft_shared_table", "graph_edges", sfDir,
+        Seq(s"$sfDir/lineitem.parquet"), Nil) {
       val w = Window.partitionBy(col("l_orderkey"))
         .orderBy(col("l_linenumber"), col("src"))
       Tables.lineitem(spark, sfDir)

@@ -144,8 +144,7 @@ object Sinks {
   // breaks the oracle hash.
   def k4RetentionRun(spark: SparkSession, sfDir: String): DataFrame = {
     val stageDir = s"${graft.Util.sessionTmpDir(spark, "graft_retain")}/" +
-      java.lang.Integer.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(sfDir))
+      graft.Artifact.key(sfDir)
     val serConf = graft.Util.serHadoopConf(spark)
     val sd = stageDir
     val sdPath = new org.apache.hadoop.fs.Path(sd)
@@ -238,13 +237,12 @@ object Sinks {
   // The read-back manifest checks per-day row counts exactly and
   // files-per-day ∈ [1, Salt]. Exercises the actual writer path
   // inside the oracle gate.
-  /** The k7 writer body: salted day-partitioned parquet at `out`. */
-  private def writeDayPartitioned(spark: SparkSession, sfDir: String,
-      out: String, salt: Int): Unit =
+  /** The k7 writer body: events salted for a day-partitioned write. */
+  private def dayPartitioned(spark: SparkSession, sfDir: String,
+      salt: Int): DataFrame =
     graft.Tables.events(spark, sfDir)
       .withColumn("day", to_date(col("ts")).cast("string"))
       .repartition(col("day"), pmod(hash(col("event_id")), lit(salt)))
-      .write.partitionBy("day").mode("overwrite").parquet(out)
 
   def k7PartitionedWrite(spark: SparkSession, sfDir: String): DataFrame = {
     val salt = 4
@@ -252,7 +250,8 @@ object Sinks {
     // k8/k9: a fixed path lets one session's overwrite race another's
     // read-back; shutdown-hook cleaned)
     val out = graft.Util.sessionTmpDir(spark, "graft_part_sink")
-    writeDayPartitioned(spark, sfDir, out, salt)
+    dayPartitioned(spark, sfDir, salt)
+      .write.partitionBy("day").mode("overwrite").parquet(out)
     val files = spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true").load(out)
       .filter(col("path").endsWith(".parquet"))
@@ -288,19 +287,12 @@ object Sinks {
     // discovery in between. The key is a file FINGERPRINT, not the
     // path: a regenerated events table must rebuild the sink, never
     // serve the stale one (the Vector.dataKey artifact rule).
-    val root = graft.Util.sessionTmpDir(spark, "graft_part_pruned")
-    val tag = graft.Util.fileFingerprint(s"$sfDir/events.parquet")
-    val out = s"$root/$tag"
-    if (!new java.io.File(s"$out/_SUCCESS").exists()) {
-      // a rotated fingerprint (in-place regeneration) supersedes every
-      // sibling copy — drop them so repeated regenerations don't
-      // multiply full-table sinks on disk
-      graft.Util.vacuumSiblings(root, tag)
-      writeDayPartitioned(spark, sfDir, out, salt = 4)
-    }
+    val sink = graft.Artifact.table(spark, "graft_part_pruned", "k7", sfDir,
+      Seq(s"$sfDir/events.parquet"), Seq("day"))(
+      dayPartitioned(spark, sfDir, salt = 4))
     val target = graft.Tables.events(spark, sfDir)
       .agg(min(to_date(col("ts")).cast("string")).as("target_day"))
-    spark.read.parquet(out)
+    sink
       .withColumn("day", col("day").cast("string"))
       .join(broadcast(target), col("day") === col("target_day"))
       .groupBy(col("day"))

@@ -727,7 +727,7 @@ object Text {
     // read pays deserialized cache batches outside whole-stage
     // codegen — the parquet read-back is the faster AND
     // substitution-safe form.
-    lexRead(spark, s"${lexIndexDir(spark, sfDir)}/tf")
+    graft.Artifact.read(spark, s"${lexIndexDir(spark, sfDir)}/tf")
 
   /** Per-TERM statistics of the lexical index — (term, df, cf):
     * document frequency (`count(1)` over the distinct (doc, term) tf
@@ -737,20 +737,20 @@ object Text {
     * alternative re-aggregated the full billion-term vocabulary per
     * invocation to use |query-terms| of the values. */
   private[graft] def termStats(spark: SparkSession, sfDir: String): DataFrame =
-    lexRead(spark, s"${lexIndexDir(spark, sfDir)}/term_stats")
+    graft.Artifact.read(spark, s"${lexIndexDir(spark, sfDir)}/term_stats")
 
   /** Per-DOC statistics of the lexical index — (doc_id, dl): document
     * length in token occurrences (`sum(tf)` per doc — Lucene's norms
     * file). Corpus-sized, so consumers JOIN it (never broadcast). */
   private[graft] def docStats(spark: SparkSession, sfDir: String): DataFrame =
-    lexRead(spark, s"${lexIndexDir(spark, sfDir)}/doc_stats")
+    graft.Artifact.read(spark, s"${lexIndexDir(spark, sfDir)}/doc_stats")
 
   /** Collection totals of the lexical index — ONE row
     * (n_docs, dl_total): doc count and total token occurrences
     * (query-likelihood's c_total ≡ dl_total — both are `sum(tf)` over
     * the whole tf table). Broadcast-sized by construction. */
   private[graft] def lexTotals(spark: SparkSession, sfDir: String): DataFrame =
-    lexRead(spark, s"${lexIndexDir(spark, sfDir)}/totals")
+    graft.Artifact.read(spark, s"${lexIndexDir(spark, sfDir)}/totals")
 
   /** Build-once root of the lexical index artifact: `tf/` plus the
     * statistics tables every production inverted index persists next
@@ -761,28 +761,13 @@ object Text {
     * rows, same integers, one build (r18 optimization: the
     * full-vocabulary df/cf aggregation and the full-corpus dl/totals
     * passes leave the per-query path; a leg now scans its query
-    * terms' postings instead of the vocabulary). `totals/` is written
-    * LAST and is the existence guard, so a build torn between writes
-    * rebuilds instead of serving a partial artifact. */
-  private def lexIndexDir(spark: SparkSession, sfDir: String): String = {
-    val root = graft.Util.sessionTmpDir(spark, "graft_retrieval_tf")
-    // tag = <dataset-path hash>_<content fingerprint>: the vacuum must
-    // scope to THIS dataset's stale generations only — with the BPE
-    // trainer now reading the index, one session legitimately builds
-    // indexes for several corpora (the multi-corpus BpeSpec), and the
-    // old vacuum-everything-but-me deleted another dataset's LIVE
-    // artifact out from under its memoized readers (FAILED_READ_FILE).
-    val pathTag = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sfDir))
-    val tag = pathTag + "_" +
-      graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
-    val dir = s"$root/$tag"
-    if (!new java.io.File(s"$dir/totals/_SUCCESS").exists()) {
-      Option(new java.io.File(root).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith(pathTag + "_") &&
-          f.getName != tag)
-        .foreach(graft.Util.deleteRecursively)
+    * terms' postings instead of the vocabulary). One [[graft.Artifact]] generation per (dataset path,
+    * documents fingerprint): a session building indexes for several
+    * corpora (the multi-corpus BpeSpec) never vacuums another dataset's
+    * live index out from under its memoized readers. */
+  private def lexIndexDir(spark: SparkSession, sfDir: String): String =
+    graft.Artifact.dir(spark, "graft_retrieval_tf", "lex", sfDir,
+        docSource(sfDir)) { dir =>
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), explode(tokens).as("term"))
         .filter(col("term") =!= "")
@@ -807,30 +792,18 @@ object Text {
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("dl_total"))
         .write.mode("overwrite").parquet(s"$dir/totals")
     }
-    dir
-  }
+
+  /** The one documents source every documents-derived artifact keys
+    * its generation on. */
+  private def docSource(sfDir: String): Seq[String] =
+    Seq(s"$sfDir/documents.parquet")
 
   /** Raw whitespace-token length per doc — (doc_id, n_tokens), the
     * context-pack budget unit persisted with the index (r18: the pack
     * stage joined a fresh corpus scan+tokenize to fetch ≤ |Q|×10 doc
     * lengths — at 100 TB a full corpus pass per prompt-assembly run). */
   private[graft] def docLen(spark: SparkSession, sfDir: String): DataFrame =
-    lexRead(spark, s"${lexIndexDir(spark, sfDir)}/doc_len")
-
-  /** Memoized read of an immutable lexical-index table: a retrieval
-    * query references 4–8 of these per construction, and each fresh
-    * `spark.read.parquet` pays driver-side listing + footer schema
-    * inference (~tens of ms — measured as the whole regression when
-    * the stats split first landed). The resolved DIR NAME embeds the
-    * source fingerprint tag, so the invalidation contract is byte-for
-    * byte the old one: regenerated data → new tag → new key; stale
-    * entries are simply never hit again. Keyed per session instance
-    * (the sharedTableOf slot convention). */
-  private val lexReadCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private def lexRead(spark: SparkSession, path: String): DataFrame =
-    lexReadCache.getOrElseUpdate(
-      (System.identityHashCode(spark), path), spark.read.parquet(path))
+    graft.Artifact.read(spark, s"${lexIndexDir(spark, sfDir)}/doc_len")
 
   /** The tf postings of just the retrieval query terms — the pushed
     * `In(term, ...)` scan every leg starts from. */
@@ -1865,8 +1838,8 @@ object Text {
     * un-memoized (the ann_brute_topk convention: its bench row
     * measures the real probe). */
   private def contamIds(spark: SparkSession, sfDir: String): DataFrame =
-    Flow.sharedTableOf(spark, s"contam_ids:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/documents.parquet")) {
+    graft.Artifact.table(spark, "graft_shared_table", "contam_ids", sfDir,
+        docSource(sfDir), Nil) {
       decontam(spark, sfDir).filter(col("contaminated"))
         .select(col("doc_id"))
     }
@@ -2110,26 +2083,9 @@ object Text {
     * cache-substitution hazard entirely (no plan to substitute).
     * Metadata-sized: one row per doc, three integer columns. */
   private def docSurprisalArtifact(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val root = graft.Util.sessionTmpDir(spark, "graft_doc_surprisal")
-    // dataset-path-scoped vacuum (the lexIndexDir r18 fix): a session
-    // training LMs for several corpora must not delete another
-    // dataset's live artifact when it builds its own
-    val pathTag = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sfDir))
-    val tag = pathTag + "_" +
-      graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
-    val dir = s"$root/$tag"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      Option(new java.io.File(root).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith(pathTag + "_") &&
-          f.getName != tag)
-        .foreach(graft.Util.deleteRecursively)
-      docSurprisal(spark, sfDir).write.mode("overwrite").parquet(dir)
-    }
-    spark.read.parquet(dir)
-  }
+      sfDir: String): DataFrame =
+    graft.Artifact.table(spark, "graft_doc_surprisal", "surprisal", sfDir,
+      docSource(sfDir), Nil)(docSurprisal(spark, sfDir))
 
   def unigramLogprob(spark: SparkSession, sfDir: String): DataFrame =
     docSurprisalArtifact(spark, sfDir)
@@ -4224,17 +4180,12 @@ object Text {
   /** Ensure the packed-corpus layout exists for this dataset (write
     * once per session/dataset, fingerprint-keyed); returns its root.
     * Shared by [[corpusBuildRun]] and [[corpusRetractRun]]. */
-  private def corpusRunLayout(spark: SparkSession, sfDir: String): String = {
-    val root = graft.Util.sessionTmpDir(spark, "graft_corpus_run")
-    val tag = graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
-    val out = s"$root/$tag"
-    if (!new java.io.File(s"$out/_SUCCESS").exists()) {
-      graft.Util.vacuumSiblings(root, tag)
+  private def corpusRunLayout(spark: SparkSession, sfDir: String): String =
+    graft.Artifact.dir(spark, "graft_corpus_run", "layout", sfDir,
+        docSource(sfDir)) {
       corpusWriteFrame(spark, sfDir)
-        .write.partitionBy("split", "shard").mode("overwrite").parquet(out)
+        .write.partitionBy("split", "shard").mode("overwrite").parquet(_)
     }
-    out
-  }
 
   /** Does a committed parquet layout actually contain part files?
     * (One shared implementation — [[graft.Util.anyParquetPart]].) */
@@ -4388,8 +4339,8 @@ object Text {
     * this artifact's cache entry. */
   private def retractManifestOf(spark: SparkSession,
       sfDir: String): DataFrame =
-    Flow.sharedTableOf(spark, s"retract_manifest:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/documents.parquet")) {
+    graft.Artifact.table(spark, "graft_shared_table", "retract_manifest",
+        sfDir, docSource(sfDir), Nil) {
       corpusBuildPipeline(spark, sfDir)
         .withColumn("retracted", isRetracted)
     }
@@ -4473,23 +4424,37 @@ object Text {
     graft.functions.BpeVocab.ensureFixture()
     val plan = retractPlanOf(spark, sfDir)
     val touched = touchedCellsOf(plan)
-    val over =
-      if (touched.isEmpty) "" else {
-        val baseOut = corpusRunLayout(spark, sfDir)
-        val root = graft.Util.sessionTmpDir(spark, "graft_corpus_retract")
-        val tag = graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
-        val o = s"$root/$tag"
-        if (!new java.io.File(s"$o/_SUCCESS").exists()) {
-          graft.Util.vacuumSiblings(root, tag)
-          spark.read.parquet(baseOut)
-            .filter(cellPred(touched)) // partition-pruned: touched only
-            .filter(!isRetracted)
-            .write.partitionBy("split", "shard").mode("overwrite")
-            .parquet(o)
-        }
-        o
-      }
+    val over = if (touched.isEmpty) "" else corpusRetractOverlay(spark, sfDir)
     retractAudit(spark, plan, touched, over)
+  }
+
+  /** The retract overlay: the touched cells of the base layout minus
+    * the retracted docs. */
+  private[graft] def corpusRetractOverlay(spark: SparkSession,
+      sfDir: String): String =
+    corpusOverlay(spark, sfDir, "graft_corpus_retract",
+      touchedCellsOf(retractPlanOf(spark, sfDir)), !isRetracted)
+
+  /** The reinstate overlay: the cleared docs' cells of the base layout
+    * with the cleared docs back and the still-retracted docs out. */
+  private[graft] def corpusReinstateOverlay(spark: SparkSession,
+      sfDir: String): String =
+    corpusOverlay(spark, sfDir, "graft_corpus_reinstate",
+      touchedCellsOf(reinstatePlanOf(spark, sfDir), "n_cleared"),
+      !isRetracted || isCleared)
+
+  /** Copy-on-write overlay over the frozen base layout: a
+    * partition-pruned rewrite of only the `touched` cells, keeping the
+    * rows `keep` admits. */
+  private def corpusOverlay(spark: SparkSession, sfDir: String, root: String,
+      touched: => Seq[(String, Long)], keep: Column): String = {
+    val baseOut = corpusRunLayout(spark, sfDir)
+    graft.Artifact.dir(spark, root, "overlay", sfDir, docSource(sfDir)) {
+      spark.read.parquet(baseOut)
+        .filter(cellPred(touched)) // partition-pruned: touched only
+        .filter(keep)
+        .write.partitionBy("split", "shard").mode("overwrite").parquet(_)
+    }
   }
 
   /** Cleared subset of the takedown list for [[corpusReinstateRun]] —
@@ -4591,21 +4556,7 @@ object Text {
     val plan = reinstatePlanOf(spark, sfDir)
     val touched = touchedCellsOf(plan, "n_cleared")
     val over =
-      if (touched.isEmpty) "" else {
-        val baseOut = corpusRunLayout(spark, sfDir)
-        val root = graft.Util.sessionTmpDir(spark, "graft_corpus_reinstate")
-        val tag = graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
-        val o = s"$root/$tag"
-        if (!new java.io.File(s"$o/_SUCCESS").exists()) {
-          graft.Util.vacuumSiblings(root, tag)
-          spark.read.parquet(baseOut)
-            .filter(cellPred(touched)) // partition-pruned: touched only
-            .filter(!isRetracted || isCleared)
-            .write.partitionBy("split", "shard").mode("overwrite")
-            .parquet(o)
-        }
-        o
-      }
+      if (touched.isEmpty) "" else corpusReinstateOverlay(spark, sfDir)
     reinstateAudit(spark, plan, touched, over)
   }
 
@@ -5147,8 +5098,8 @@ object Text {
     * substitute it for the append query's own plan (the
     * retract-manifest rule). */
   private def versionManifest(spark: SparkSession, sfDir: String): DataFrame =
-    Flow.sharedTableOf(spark, s"version_diff_manifest:$sfDir",
-        graft.Util.fileFingerprint(s"$sfDir/documents.parquet")) {
+    graft.Artifact.table(spark, "graft_shared_table", "version_diff_manifest",
+        sfDir, docSource(sfDir), Nil) {
       corpusAppendPipeline(spark, sfDir).withColumn("vd", lit(true))
     }
 
@@ -5308,7 +5259,7 @@ object Text {
     * Every version's manifest is a predicate over the registry
     * [[versionManifest]] (the append contract makes v1/v2 filters;
     * the takedown predicates are the retract family's own), EXCEPT
-    * v5, which is a PHYSICAL artifact ([[chainCompactDir]]) read
+    * v5, which is a PHYSICAL artifact ([[chainCompactRead]]) read
     * back — so the asof read across the compaction boundary checks
     * the committed files, not the arithmetic that produced them. */
   private val ChainKinds: Seq[(Int, Option[Int], String)] = Seq(
@@ -5336,29 +5287,18 @@ object Text {
     * minus-takedowns state; this one compacts the append⊕retract⊕
     * reinstate composition). Write cost is one manifest-sized job
     * (per-doc metadata rows, never text); every later asof(v5) is a
-    * partitioned parquet read of the committed files. */
-  private def chainCompactDir(spark: SparkSession, sfDir: String): String = {
-    val root = graft.Util.sessionTmpDir(spark, "graft_chain_compact")
-    val tag = graft.Util.fileFingerprint(s"$sfDir/documents.parquet")
-    val dir = s"$root/$tag"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      graft.Util.vacuumSiblings(root, tag)
-      versionManifest(spark, sfDir)
-        .filter(chainPred(4))
-        .select(col("doc_id"), col("bin"), col("n_tokens"),
-          col("split"), col("shard"))
-        .write.partitionBy("split", "shard").mode("overwrite").parquet(dir)
-    }
-    dir
-  }
-
-  /** asof(v5): the committed compact artifact read back, partition
+    * partitioned parquet read of the committed files, partition
     * columns re-cast to the manifest's types (partitionBy round-trips
     * them as inferred dir keys). */
   private def chainCompactRead(spark: SparkSession,
       sfDir: String): DataFrame =
-    spark.read.parquet(chainCompactDir(spark, sfDir))
-      .select(col("doc_id"),
+    graft.Artifact.table(spark, "graft_chain_compact", "v5", sfDir,
+        docSource(sfDir), Seq("split", "shard")) {
+      versionManifest(spark, sfDir)
+        .filter(chainPred(4))
+        .select(col("doc_id"), col("bin"), col("n_tokens"),
+          col("split"), col("shard"))
+    }.select(col("doc_id"),
         col("split").cast("string").as("split"),
         col("shard").cast("long").as("shard"),
         col("bin"), col("n_tokens"))

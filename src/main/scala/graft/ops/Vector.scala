@@ -406,31 +406,33 @@ object Vector {
     * assignment sweep plus a full-corpus vec_id join — at 100 TB and
     * a serving cadence, the scale-killer this layout removes. The
     * vectors are stored exactly once per index (the assignment IS the
-    * index's posting payload, the standard IVF flat layout), and the
-    * completion gate is the partitioned write's own _SUCCESS, written
-    * last — a torn build has no marker and rebuilds. */
+    * index's posting payload, the standard IVF flat layout), and a
+    * torn build has no [[graft.Artifact]] marker and rebuilds. */
   private[graft] def persistIndexDir(spark: SparkSession,
-      sfDir: String): String = {
+      sfDir: String): String = indexDir(spark, "persist", sfDir) { dir =>
     import spark.implicits._
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(dataKey(sfDir).hashCode)
-    if (!new java.io.File(s"$dir/assign.parquet/_SUCCESS").exists()) {
-      // centroids.parquet is part of the artifact on purpose: an
-      // out-of-corpus query vector needs the centroids to pick its
-      // probe cells — the serving stream and the IVF dense leg both
-      // coarse-probe through them.
-      kmeansCentroids(spark, sfDir, k = corpusK(spark, sfDir), iters = 3).toSeq
-        .map { case (c, v) => (c, v.toSeq) }
-        .toDF("cell", "centroid")
-        .write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-      kmeansAssign(spark, sfDir, k = corpusK(spark, sfDir), iters = 3)
-        .join(withNorm2(spark, sfDir)
-          .select(col("vec_id"), col("embedding"), col("nrm2")), "vec_id")
-        .write.partitionBy("cell").mode("overwrite")
-        .parquet(s"$dir/assign.parquet")
-    }
-    dir
+    // centroids.parquet is part of the artifact on purpose: an
+    // out-of-corpus query vector needs the centroids to pick its
+    // probe cells — the serving stream and the IVF dense leg both
+    // coarse-probe through them.
+    kmeansCentroids(spark, sfDir, k = corpusK(spark, sfDir), iters = 3).toSeq
+      .map { case (c, v) => (c, v.toSeq) }
+      .toDF("cell", "centroid")
+      .write.mode("overwrite").parquet(s"$dir/centroids.parquet")
+    kmeansAssign(spark, sfDir, k = corpusK(spark, sfDir), iters = 3)
+      .join(withNorm2(spark, sfDir)
+        .select(col("vec_id"), col("embedding"), col("nrm2")), "vec_id")
+      .write.partitionBy("cell").mode("overwrite")
+      .parquet(s"$dir/assign.parquet")
   }
+
+  /** A [[graft.Artifact]] generation of one index `stage` under the
+    * shared `graft_ann_index` session root, keyed on the embeddings
+    * table. */
+  private def indexDir(spark: SparkSession, stage: String, sfDir: String)(
+      build: String => Unit): String =
+    graft.Artifact.dir(spark, "graft_ann_index", stage, sfDir,
+      Seq(s"$sfDir/embeddings.parquet"))(build)
 
   /** Partition-pruned probe of the PERSISTED artifact — the consumer
     * shape the cell-partitioned layout exists for: the contract
@@ -573,70 +575,49 @@ object Vector {
     * (persisted centroids + base⊕delta assignment): runs
     * [[annIndexAppend]]'s two-phase build if missing, returns the
     * artifact dir — shared with [[annIndexVersionDiff]]. */
-  private def incrIndexDir(spark: SparkSession, sfDir: String): String = {
+  private[graft] def incrIndexDir(spark: SparkSession,
+      sfDir: String): String = indexDir(spark, "incr", sfDir) { dir =>
     import spark.implicits._
     val k = corpusK(spark, sfDir)
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(dataKey(sfDir).hashCode) + "_incr"
     val assignDir = s"$dir/assign.parquet"
     def listFiles() = Option(new java.io.File(assignDir).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
       .map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1).toSeq
-    // Two-phase commit marker: the bare assignDir probe is NOT a safe
-    // build gate — an interrupted build leaves assign.parquet present
-    // but the manifest or delta append unwritten, and the build would
-    // never re-run (the same class of bug the retract/reinstate
-    // overlays fixed via _SUCCESS probes). The marker is written LAST,
-    // after manifest + append + the append-only assertion; a dir
-    // without it is a torn build and is wiped before rebuilding.
-    val commitMarker = new java.io.File(s"$dir/_SUCCESS")
-    if (new java.io.File(assignDir).exists() && !commitMarker.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
-    if (!commitMarker.exists()) {
-      // Deterministic shared kernel over the base slice (same
-      // executor-merged, ascending-partition-fold association as the
-      // full-corpus trainer).
-      val cs = kmeansCentroidsOn(spark, sfDir, k, iters = 3,
-        Some(!isIncrDelta), tag = "#base")
-      // phase 1 — the index build: centroids + base assignment
-      cs.toSeq.map { case (c, v) => (c, v.toSeq) }.toDF("cell", "centroid")
-        .write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-      Tables.embeddings(spark, sfDir).filter(!isIncrDelta)
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .map { case (id, v) => (id, nearest(cs)(v)) }.toDF("vec_id", "cell")
-        .write.mode("overwrite").parquet(assignDir)
-      val baseFiles = listFiles()
-      // v1 snapshot manifest: the file list the base build committed —
-      // the version pointer [[annReadAsof]] time-travels through (the
-      // append-only contract keeps these files immutable, so listing
-      // them IS the v1 snapshot, the Iceberg manifest semantics)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/manifest_v1.txt"),
-        baseFiles.map(_._1).mkString("\n").getBytes("UTF-8"))
-      // phase 2 — the append job: centroids come from the ARTIFACT,
-      // only delta rows are scored, the write is an append
-      val persistedCs = spark.read.parquet(s"$dir/centroids.parquet")
-        .as[(Int, Seq[Double])].collect().sortBy(_._1)
-        .map { case (c, v) => (c, v.toArray) }
-      Tables.embeddings(spark, sfDir).filter(isIncrDelta)
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .map { case (id, v) => (id, nearest(persistedCs)(v)) }.toDF("vec_id", "cell")
-        .write.mode("append").parquet(assignDir)
-      // append-only contract: every base file survives byte-identical
-      val after = listFiles().toSet
-      val rewritten = baseFiles.filterNot(after.contains)
-      require(rewritten.isEmpty,
-        s"index append rewrote base files: ${rewritten.map(_._1).mkString(", ")}")
-      // commit: everything above is durable and verified
-      java.nio.file.Files.write(commitMarker.toPath, Array.empty[Byte])
-    }
-    dir
+    // Deterministic shared kernel over the base slice (same
+    // executor-merged, ascending-partition-fold association as the
+    // full-corpus trainer).
+    val cs = kmeansCentroidsOn(spark, sfDir, k, iters = 3,
+      Some(!isIncrDelta), tag = "#base")
+    // phase 1 — the index build: centroids + base assignment
+    cs.toSeq.map { case (c, v) => (c, v.toSeq) }.toDF("cell", "centroid")
+      .write.mode("overwrite").parquet(s"$dir/centroids.parquet")
+    Tables.embeddings(spark, sfDir).filter(!isIncrDelta)
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .map { case (id, v) => (id, nearest(cs)(v)) }.toDF("vec_id", "cell")
+      .write.mode("overwrite").parquet(assignDir)
+    val baseFiles = listFiles()
+    // v1 snapshot manifest: the file list the base build committed —
+    // the version pointer [[annReadAsof]] time-travels through (the
+    // append-only contract keeps these files immutable, so listing
+    // them IS the v1 snapshot, the Iceberg manifest semantics)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$dir/manifest_v1.txt"),
+      baseFiles.map(_._1).mkString("\n").getBytes("UTF-8"))
+    // phase 2 — the append job: centroids come from the ARTIFACT,
+    // only delta rows are scored, the write is an append
+    val persistedCs = spark.read.parquet(s"$dir/centroids.parquet")
+      .as[(Int, Seq[Double])].collect().sortBy(_._1)
+      .map { case (c, v) => (c, v.toArray) }
+    Tables.embeddings(spark, sfDir).filter(isIncrDelta)
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .map { case (id, v) => (id, nearest(persistedCs)(v)) }.toDF("vec_id", "cell")
+      .write.mode("append").parquet(assignDir)
+    // append-only contract: every base file survives byte-identical
+    val after = listFiles().toSet
+    val rewritten = baseFiles.filterNot(after.contains)
+    require(rewritten.isEmpty,
+      s"index append rewrote base files: ${rewritten.map(_._1).mkString(", ")}")
   }
 
   /** `ann_index_version_diff` — the SNAPSHOT SUMMARY between index
@@ -732,16 +713,13 @@ object Vector {
     * under _SUCCESS — asof(v5) reads these files back, so the
     * compaction boundary is checked physically. Metadata-sized write
     * (assignment rows, never embeddings). */
-  private def annChainCompactDir(spark: SparkSession,
-      sfDir: String): String = {
-    val dir = incrIndexDir(spark, sfDir) + "_chain"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+  private def annChainCompact(spark: SparkSession,
+      sfDir: String): DataFrame =
+    graft.Artifact.table(spark, "graft_ann_index", "chain", sfDir,
+        Seq(s"$sfDir/embeddings.parquet"), Seq("cell")) {
       spark.read.parquet(s"${incrIndexDir(spark, sfDir)}/assign.parquet")
         .filter(annChainPred(4))
-        .write.partitionBy("cell").mode("overwrite").parquet(dir)
     }
-    dir
-  }
 
   /** `ann_version_log` — the registry VERSION LOG for the vector
     * index (one row per committed version: parent, kind, live vector
@@ -762,7 +740,7 @@ object Vector {
     val vols = (1 to 4).map(v => agg(assign.filter(annChainPred(v)), v))
       .reduce(_ unionByName _)
       .unionByName(
-        agg(spark.read.parquet(annChainCompactDir(spark, sfDir)), 5))
+        agg(annChainCompact(spark, sfDir), 5))
     val meta = Seq((1, null.asInstanceOf[Integer], "base"),
       (2, Integer.valueOf(1), "append"), (3, Integer.valueOf(2), "retract"),
       (4, Integer.valueOf(3), "reinstate"), (5, Integer.valueOf(4), "compact"))
@@ -832,7 +810,7 @@ object Vector {
     val v1 = spark.read.parquet(
       v1Files.map(n => s"$dir/assign.parquet/$n"): _*)
     val v2 = spark.read.parquet(s"$dir/assign.parquet")
-    val v5 = spark.read.parquet(annChainCompactDir(spark, sfDir))
+    val v5 = annChainCompact(spark, sfDir)
       .select(col("vec_id"), col("cell"))
     val versioned = v1.withColumn("version", lit(1))
       .unionByName(v2.withColumn("version", lit(2)))
@@ -955,18 +933,16 @@ object Vector {
     import spark.implicits._
     import org.apache.spark.sql.types._
     val k = corpusK(spark, sfDir)
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(dataKey(sfDir).hashCode) + "_stream"
-    val assignDir = s"$dir/assign.parquet"
     // phase 1 — identical deterministic kernel to the batch append
     // (memoized per dataset+tag, so batch and stream share ONE train)
     val cs = kmeansCentroidsOn(spark, sfDir, k, iters = 3,
       Some(!isIncrDelta), tag = "#base")
-    if (!new java.io.File(assignDir).exists())
+    val baseAssign = graft.Artifact.table(spark, "graft_ann_index", "stream",
+        sfDir, Seq(s"$sfDir/embeddings.parquet"), Nil) {
       Tables.embeddings(spark, sfDir).filter(!isIncrDelta)
         .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
         .map { case (id, v) => (id, nearest(cs)(v)) }.toDF("vec_id", "cell")
-        .write.mode("overwrite").parquet(assignDir)
+    }
     // phase 2 — the delta arrives as a stream; assignment is pure
     // map work against the closure-shipped centroid array
     val embSchema = new StructType().add("vec_id", LongType)
@@ -984,7 +960,7 @@ object Vector {
     val staged = graft.streaming.EventsStream.runIncremental(
       spark, assignedDelta, "annx", sfDir,
       org.apache.spark.sql.streaming.OutputMode.Update())
-    val assigned = spark.read.parquet(assignDir)
+    val assigned = baseAssign
       .unionByName(staged.select(col("vec_id"), col("cell")))
     appendGates(spark, sfDir, assigned)
   }
@@ -1010,20 +986,15 @@ object Vector {
     * Shared by the serving stream and its batch comparator
     * [[serveBatchTopk]] so both answer the same request set. */
   private[graft] def serveFeedDir(spark: SparkSession,
-      sfDir: String): String = {
-    val feed = graft.Util.sessionTmpDir(spark, "graft_ann_serve") + "/" +
-      java.lang.Integer.toHexString(dataKey(sfDir).hashCode) + "/feed"
-    if (!new java.io.File(s"$feed/_SUCCESS").exists()) {
-      val rootFile = new java.io.File(feed).getParentFile
-      graft.Util.vacuumSiblings(rootFile.getParent, rootFile.getName)
+      sfDir: String): String =
+    graft.Artifact.dir(spark, "graft_ann_serve", "feed", sfDir,
+        Seq(s"$sfDir/embeddings.parquet")) {
       withNorm2(spark, sfDir).filter(isServeQuery)
         .select(col("vec_id"), col("embedding"), col("nrm2"),
           pmod(col("vec_id"), lit(3)).cast("int").as("slice"))
         .repartition(col("slice"))
-        .write.partitionBy("slice").mode("overwrite").parquet(feed)
+        .write.partitionBy("slice").mode("overwrite").parquet(_)
     }
-    feed
-  }
 
   /** `stream_ann_query` — the SERVING leg of the index lifecycle
     * (judge r16 next-round #4): every stream twin so far is
@@ -1251,6 +1222,8 @@ object Vector {
       .select(col("qid"), col("rank"), col("vec_id"), col("sim_e4"))
   }
 
+  private val serveBruteCache = scala.collection.concurrent.TrieMap
+    .empty[(String, String), Seq[(Long, Long)]]
   /** Exact brute-force cosine top-10 over the serve query set — the
     * recall ground truth. Memoized per (application, dataset) like
     * [[l2BruteTopk]] and the IVF gate's [[cosineBruteCache]]: the
@@ -1258,9 +1231,13 @@ object Vector {
     * corpus-bounded), and BOTH serving legs' gates consult it — one
     * corpus sweep per session instead of one per gate invocation
     * (r18, guide §1.2: don't recompute ground truth you already
-    * have). */
-  private val serveBruteCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[(Long, Long)]]
+    * have).
+    *
+    * Contract: the frame holds `(qid, vec_id)` only — the exact
+    * top-10 membership per serve query, with neither similarity nor
+    * rank, because the memo keeps just those pairs. Consumers join
+    * on both columns to count recall hits; a caller needing scores
+    * or order must rank its own candidates. */
   private[graft] def serveBruteTopk(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
@@ -1328,20 +1305,21 @@ object Vector {
     * over its nprobe cells (32× narrower than the f32 vectors) and
     * touches full vectors only for the shortlist's point reads.
     * Codes derive from the SAME persisted assignment (one pruned-free
-    * read of assign.parquet at build time), so code cells and vector
-    * cells can never drift. Build-once: completion marker is the
-    * partitioned write's own _SUCCESS, written last. */
+    * read of [[persistIndexDir]]'s assign.parquet at build time), so
+    * code cells and vector cells can never drift. Its own
+    * [[graft.Artifact]] generation: the IVF generation is committed
+    * before the codes exist. */
   private[graft] def persistPqDir(spark: SparkSession,
       sfDir: String): String = {
-    import spark.implicits._
-    val dir = persistIndexDir(spark, sfDir)
-    if (!new java.io.File(s"$dir/codes.parquet/_SUCCESS").exists()) {
+    val ivf = persistIndexDir(spark, sfDir)
+    indexDir(spark, "pq", sfDir) { dir =>
+      import spark.implicits._
       val books = pqTrain(spark, sfDir, iters = 3)
       books.zipWithIndex.flatMap { case (bk, m) =>
         bk.zipWithIndex.map { case (cent, c) => (m, c, cent.toSeq) }
       }.toSeq.toDF("m", "code", "centroid")
         .write.mode("overwrite").parquet(s"$dir/books.parquet")
-      spark.read.parquet(s"$dir/assign.parquet")
+      spark.read.parquet(s"$ivf/assign.parquet")
         .select(col("cell"), col("vec_id"), col("embedding"))
         .as[(Int, Long, Array[Float])]
         .map { case (cell, id, v) => (cell, id, pqCodeBytes(books, v)) }
@@ -1350,7 +1328,6 @@ object Vector {
         .write.partitionBy("cell").mode("overwrite")
         .parquet(s"$dir/codes.parquet")
     }
-    dir
   }
 
   /** The probed-cell set of one serving micro-batch: each arrival's
@@ -1374,7 +1351,7 @@ object Vector {
     * (ScaleSpec pins cell PartitionFilters here) — the batch kernel
     * executes this frame into its bounded point-read list, which
     * erases the codes scan from the final re-rank plan. */
-  private[graft] def servePqShortlist(dir: String,
+  private[graft] def servePqShortlist(pqDir: String,
       cents: Array[(Int, Array[Double])],
       books: Array[Array[Array[Double]]], nprobe: Int,
       cells: Array[Int], batch: DataFrame): DataFrame = {
@@ -1387,7 +1364,7 @@ object Vector {
         val lut = pqLut(books, qv)
         nearestCells(cents, nprobe)(qv).map(c => (qid, c, lut))
       }.toDF("qid", "cell", "lut")
-    val adc = spark.read.parquet(s"$dir/codes.parquet")
+    val adc = spark.read.parquet(s"$pqDir/codes.parquet")
       .filter(col("cell").isin(cells.map(Int.box): _*))
       .join(broadcast(probed), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
@@ -1431,14 +1408,14 @@ object Vector {
     * separately-inspectable frame, because executing it to the
     * point-read list erases the codes scan from the final re-rank
     * plan); this method executes the shortlist and re-ranks. */
-  private[graft] def servePqBatch(dir: String,
+  private[graft] def servePqBatch(dir: String, pqDir: String,
       cents: Array[(Int, Array[Double])],
       books: Array[Array[Array[Double]]], nprobe: Int,
       batch: DataFrame): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
     val cells = servePqCells(cents, nprobe, batch)
-    val short = servePqShortlist(dir, cents, books, nprobe, cells, batch)
+    val short = servePqShortlist(pqDir, cents, books, nprobe, cells, batch)
     // bounded: |batch| × C (cell, qid, vec_id) triples — the
     // point-read list
     val shortTriples = short.as[(Int, Long, Long)].collect().toSeq
@@ -1494,7 +1471,8 @@ object Vector {
       sfDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = persistPqDir(spark, sfDir)
+    val dir = persistIndexDir(spark, sfDir)
+    val pqDir = persistPqDir(spark, sfDir)
     val cents = spark.read.parquet(s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
       .map { case (c, v) => (c, v.toArray) }
@@ -1513,7 +1491,7 @@ object Vector {
     val staged = graft.streaming.EventsStream.runIncrementalMapped(
       spark, src, "annservepq", feed, outSchema,
       org.apache.spark.sql.streaming.OutputMode.Update())(
-      servePqBatch(dir, cents, books, nprobe, _))
+      servePqBatch(dir, pqDir, cents, books, nprobe, _))
     serveGates(spark, sfDir, staged, servePqBatchTopk(spark, sfDir),
       ServeRecallFloor)
   }
@@ -1524,12 +1502,13 @@ object Vector {
   private[graft] def servePqBatchTopk(spark: SparkSession,
       sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = persistPqDir(spark, sfDir)
+    val dir = persistIndexDir(spark, sfDir)
+    val pqDir = persistPqDir(spark, sfDir)
     val cents = spark.read.parquet(s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
       .map { case (c, v) => (c, v.toArray) }
     val books = pqTrain(spark, sfDir, iters = 3)
-    servePqBatch(dir, cents, books, math.min(4, cents.length),
+    servePqBatch(dir, pqDir, cents, books, math.min(4, cents.length),
       spark.read.parquet(serveFeedDir(spark, sfDir))
         .select(col("vec_id"), col("embedding"), col("nrm2")))
   }
@@ -1571,23 +1550,19 @@ object Vector {
     * the only duplicated work is the assignment map + one partitioned
     * write (metadata-only — this copy stays vector-free because the
     * retract gates audit membership, never similarity payloads). */
-  private def retractBaseAssign(spark: SparkSession, sfDir: String): String = {
+  private[graft] def retractBaseAssign(spark: SparkSession,
+      sfDir: String): String = indexDir(spark, "retract", sfDir) { dir =>
     import spark.implicits._
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(dataKey(sfDir).hashCode) + "_retract"
-    val assignDir = s"$dir/assign.parquet"
-    if (!new java.io.File(assignDir).exists()) {
-      val cs = kmeansCentroids(spark, sfDir, k = corpusK(spark, sfDir),
-        iters = 3)
-      cs.toSeq.map { case (c, v) => (c, v.toSeq) }.toDF("cell", "centroid")
-        .write.mode("overwrite").parquet(s"$dir/centroids.parquet")
-      Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-        .map { case (id, v) => (id, nearest(cs)(v)) }.toDF("vec_id", "cell")
-        .write.partitionBy("cell").mode("overwrite").parquet(assignDir)
-    }
-    assignDir
-  }
+    val cs = kmeansCentroids(spark, sfDir, k = corpusK(spark, sfDir),
+      iters = 3)
+    cs.toSeq.map { case (c, v) => (c, v.toSeq) }.toDF("cell", "centroid")
+      .write.mode("overwrite").parquet(s"$dir/centroids.parquet")
+    Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .map { case (id, v) => (id, nearest(cs)(v)) }.toDF("vec_id", "cell")
+      .write.partitionBy("cell").mode("overwrite")
+      .parquet(s"$dir/assign.parquet")
+  } + "/assign.parquet"
 
   /** The gate tail both retract twins share: live = (base cells the
     * overlay doesn't cover) ∪ overlay, audited per cell
@@ -1657,20 +1632,40 @@ object Vector {
       .orderBy(col("qid"))
   }
 
-  def annIndexRetract(spark: SparkSession, sfDir: String): DataFrame = {
+  def annIndexRetract(spark: SparkSession, sfDir: String): DataFrame =
+    retractIndexGates(spark, sfDir, retractBaseAssign(spark, sfDir),
+      retractOverlayDir(spark, sfDir))
+
+  /** The retract scrub's overlay: the cells holding a retracted vector,
+    * minus the retracted rows. */
+  private[graft] def retractOverlayDir(spark: SparkSession,
+      sfDir: String): String =
+    indexOverlay(spark, sfDir, "retract_overlay", isVecRetracted,
+      !isVecRetracted)
+
+  /** The reinstate overlay: the cells holding a cleared vector, with
+    * the cleared rows back and the still-retracted rows out. */
+  private[graft] def reinstateOverlayDir(spark: SparkSession,
+      sfDir: String): String =
+    indexOverlay(spark, sfDir, "reinstate_overlay", isVecCleared,
+      !isVecRetracted || isVecCleared)
+
+  /** Copy-on-write overlay over [[retractBaseAssign]]: touched cells
+    * from the assignment METADATA (bounded by k), then a
+    * partition-pruned rewrite of only those cells keeping the rows
+    * `keep` admits. */
+  private def indexOverlay(spark: SparkSession, sfDir: String, stage: String,
+      touch: org.apache.spark.sql.Column,
+      keep: org.apache.spark.sql.Column): String = {
     val assignDir = retractBaseAssign(spark, sfDir)
-    val overDir = assignDir.stripSuffix("/assign.parquet") + "/overlay.parquet"
-    if (!new java.io.File(s"$overDir/_SUCCESS").exists()) {
-      // the scrub: touched cells from the assignment METADATA (bounded
-      // by k), then a partition-pruned CoW rewrite of only those cells
-      val touched = spark.read.parquet(assignDir).filter(isVecRetracted)
+    indexDir(spark, stage, sfDir) { overDir =>
+      val touched = spark.read.parquet(assignDir).filter(touch)
         .select(col("cell")).distinct().collect().map(_.getInt(0))
       spark.read.parquet(assignDir)
         .filter(col("cell").isin(touched.map(Int.box): _*))
-        .filter(!isVecRetracted)
+        .filter(keep)
         .write.partitionBy("cell").mode("overwrite").parquet(overDir)
     }
-    retractIndexGates(spark, sfDir, assignDir, overDir)
   }
 
   /** Cleared subset of the vector takedown list for
@@ -1701,23 +1696,9 @@ object Vector {
     * writes its partition. That structural difference is why this leg
     * assembles its own live/audit tail instead of parameterizing the
     * retract one. */
-  def annIndexReinstate(spark: SparkSession, sfDir: String): DataFrame = {
-    val assignDir = retractBaseAssign(spark, sfDir)
-    val overDir = assignDir.stripSuffix("/assign.parquet") +
-      "/reinstate_overlay.parquet"
-    // commit-marker gating, not bare dir existence: an interrupted
-    // overlay write must re-run, never be read as complete (review
-    // r15 #2; the corpus twin's _SUCCESS rule)
-    if (!new java.io.File(s"$overDir/_SUCCESS").exists()) {
-      val touched = spark.read.parquet(assignDir).filter(isVecCleared)
-        .select(col("cell")).distinct().collect().map(_.getInt(0))
-      spark.read.parquet(assignDir)
-        .filter(col("cell").isin(touched.map(Int.box): _*))
-        .filter(!isVecRetracted || isVecCleared)
-        .write.partitionBy("cell").mode("overwrite").parquet(overDir)
-    }
-    reinstateIndexGates(spark, sfDir, assignDir, overDir)
-  }
+  def annIndexReinstate(spark: SparkSession, sfDir: String): DataFrame =
+    reinstateIndexGates(spark, sfDir, retractBaseAssign(spark, sfDir),
+      reinstateOverlayDir(spark, sfDir))
 
   /** The gate tail both reinstate twins share (the
     * [[retractIndexGates]] convention): live = (untouched base cells
@@ -1884,9 +1865,9 @@ object Vector {
       staticRetract: Option[org.apache.spark.sql.Column] = None)
       : graft.streaming.StreamCow.Spec = {
     val root = graft.Util.sessionTmpDir(spark, prefix)
-    val tag = java.lang.Integer.toHexString(dataKey(sfDir).hashCode)
     graft.streaming.StreamCow.Spec("vec_id", Seq("cell"),
-      retractBaseAssign(spark, sfDir), s"$root/$tag", staticRetract)
+      retractBaseAssign(spark, sfDir),
+      s"$root/${graft.Artifact.key(dataKey(sfDir))}", staticRetract)
   }
 
   /** `ann_index_compact` — MAJOR COMPACTION of the index-side CoW

@@ -128,9 +128,8 @@ object EventsStream {
   def runIncrementalMapped(spark: SparkSession, df: DataFrame, name: String,
       srcDir: String, outSchema: StructType, mode: OutputMode)(
       f: DataFrame => DataFrame): DataFrame = {
-    val key = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(srcDir))
-    val base = s"${graft.Util.sessionTmpDir(spark, "graft_stream")}/${name}_$key"
+    val base = s"${graft.Util.sessionTmpDir(spark, "graft_stream")}/" +
+      s"${name}_${graft.Artifact.key(srcDir)}"
     val outDir = s"$base/out"
     val isComplete = mode == OutputMode.Complete()
     val q = df.writeStream

@@ -261,6 +261,34 @@ class DedupSpec extends SparkSuite {
 }
 
 class RelationalOpsSpec extends SparkSuite {
+  test("agg_cube and agg_grouping_sets on an empty lineitem: Spark's " +
+      "grouping sets plus a grand total with n = 0") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_li")
+      .toString
+    Tables.lineitem(spark, sf).limit(0)
+      .write.parquet(s"$dir/lineitem.parquet")
+    Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
+    // Spark's Expand-based CUBE / GROUPING SETS drops the empty grouping
+    // set's row on empty input; the SQL standard (and the DuckDB
+    // oracle) keep it as the global aggregate, n = 0 and NULL sums
+    val cases = Seq(
+      (ops.Relational.aggCube(spark, dir), ops.Relational.aggCubeSql,
+        """SELECT CAST(NULL AS STRING), CAST(NULL AS STRING), count(1),
+           CAST(sum(l_quantity) AS BIGINT) FROM lineitem"""),
+      (ops.Relational.aggGroupingSets(spark, dir),
+        ops.Relational.aggGroupingSetsSql,
+        """SELECT '<all>', '<all>', 1, 1, count(1),
+           CAST(sum(floor(l_extendedprice * 100.0)) AS BIGINT)
+           FROM lineitem"""))
+    try cases.foreach { case (got, sets, grandTotal) =>
+      val want = spark.sql(sets).collect().toSeq ++
+        spark.sql(grandTotal).collect().toSeq
+      assert(got.collect().toSeq == want, sets)
+      assert(want.map(_.getAs[Long](want.head.length - 2)) == Seq(0L),
+        "guard: one grand-total row counting 0 lineitems")
+    } finally spark.catalog.dropTempView("lineitem")
+  }
+
   test("ALL set-ops follow count arithmetic; corr matches direct computation") {
     val cc = Tables.customer(spark, sf).groupBy(col("c_nationkey")).count()
       .collect().map(r => r.getAs[Number](0).longValue -> r.getLong(1)).toMap
@@ -780,9 +808,7 @@ class TextOpsSpec extends SparkSuite {
     }
     // the reinstate overlay holds EXACTLY the touched cells' live set:
     // cleared docs present, still-retracted docs absent
-    val root = graft.Util.sessionTmpDir(spark, "graft_corpus_reinstate")
-    val tag = graft.Util.fileFingerprint(s"$sf/documents.parquet")
-    val over = spark.read.parquet(s"$root/$tag")
+    val over = spark.read.parquet(ops.Text.corpusReinstateOverlay(spark, sf))
     assert(over.filter(col("doc_id") % 89 === 3 && col("doc_id") % 2 =!= 0)
       .count() == 0, "still-retracted docs must not be reinstated")
     val clearedInOverlay = over
@@ -974,10 +1000,9 @@ class TextOpsSpec extends SparkSuite {
     val touchedWithSurvivor =
       cellAgg.filter { case (_, (nr, nb)) => nr > 0 && nb > nr }.keySet
     if (touched.nonEmpty) {
-      val root = graft.Util.sessionTmpDir(spark, "graft_corpus_retract")
-      val tag = graft.Util.fileFingerprint(s"$sf/documents.parquet")
+      val overDir = ops.Text.corpusRetractOverlay(spark, sf)
       val cells = for {
-        s <- Option(new java.io.File(s"$root/$tag").listFiles()).toSeq.flatten
+        s <- Option(new java.io.File(overDir).listFiles()).toSeq.flatten
         if s.isDirectory && s.getName.startsWith("split=")
         h <- Option(s.listFiles()).toSeq.flatten
         if h.isDirectory && h.getName.startsWith("shard=")
@@ -1298,10 +1323,8 @@ class VectorSpec extends SparkSuite {
       assert(r.getAs[Boolean]("recall_ok"), s"survivor recall floor: $r")
       assert(r.getAs[Boolean]("cow_ok"), s"per-cell reconciliation: $r")
     }
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(Vector.dataKey(sf).hashCode) + "_retract"
-    val base = spark.read.parquet(s"$dir/assign.parquet")
-    val over = spark.read.parquet(s"$dir/overlay.parquet")
+    val base = spark.read.parquet(Vector.retractBaseAssign(spark, sf))
+    val over = spark.read.parquet(Vector.retractOverlayDir(spark, sf))
     // overlay cells == exactly the cells that contained a retracted vec
     val touched = base.filter(pmod(col("vec_id"), lit(89L)) === 3L)
       .select("cell").distinct().collect().map(_.getInt(0)).toSet
@@ -1362,8 +1385,7 @@ class VectorSpec extends SparkSuite {
     }
     // the persisted assignment really contains the late batch (the
     // append happened) — read it back through the same session root
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(Vector.dataKey(sf).hashCode) + "_incr"
+    val dir = Vector.incrIndexDir(spark, sf)
     val assigned = spark.read.parquet(s"$dir/assign.parquet")
     val nDelta = assigned.filter(pmod(col("vec_id"), lit(101)) === 13).count()
     val nExpect = Tables.embeddings(spark, sf)
@@ -1416,13 +1438,11 @@ class VectorSpec extends SparkSuite {
       emb.count() - emb.filter(pmod(col("vec_id"), lit(89)) === 3).count()
         + nCleared)
     // the overlay restores cleared vectors at EXACTLY their base cells
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(Vector.dataKey(sf).hashCode) + "_retract"
-    val base = spark.read.parquet(s"$dir/assign.parquet")
+    val base = spark.read.parquet(Vector.retractBaseAssign(spark, sf))
       .filter(pmod(col("vec_id"), lit(89)) === 3 &&
         pmod(col("vec_id"), lit(2)) === 0)
       .select(col("vec_id"), col("cell").cast("int"))
-    val over = spark.read.parquet(s"$dir/reinstate_overlay.parquet")
+    val over = spark.read.parquet(Vector.reinstateOverlayDir(spark, sf))
       .filter(pmod(col("vec_id"), lit(89)) === 3)
       .select(col("vec_id"), col("cell").cast("int"))
     assert(over.exceptAll(base).count() == 0 &&
@@ -1447,8 +1467,7 @@ class VectorSpec extends SparkSuite {
     assert(rows.forall(_.getAs[Boolean]("stable")))
     // time travel reads the manifest's files, never the trainer: the
     // v1 leg of the plan scans exactly the manifest's file count
-    val dir = graft.Util.sessionTmpDir(spark, "graft_ann_index") + "/" +
-      java.lang.Integer.toHexString(Vector.dataKey(sf).hashCode) + "_incr"
+    val dir = Vector.incrIndexDir(spark, sf)
     val man = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(s"$dir/manifest_v1.txt"))
     assert(!man.isEmpty, "v1 manifest committed by the base build")

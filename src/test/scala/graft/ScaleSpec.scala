@@ -1280,7 +1280,7 @@ class ScaleSpec extends SparkSuite {
         .exists(p => p.toString.contains("assign.parquet") ||
           p.toString.contains("embeddings.parquet"))),
       "the ADC stage must touch only the 16 B/vec codes")
-    val pq = graft.ops.Vector.servePqBatch(pqDir, cents, books,
+    val pq = graft.ops.Vector.servePqBatch(dir, pqDir, cents, books,
       pqNprobe, batch)
     pinned(pq, "servePqBatch")
     val assignScans = scans(pq).filter(_.relation.location.rootPaths
@@ -1298,8 +1298,13 @@ class ScaleSpec extends SparkSuite {
     // cells through the typed assignment stage would re-train on every
     // probe, the cost decoupling the artifact exists to provide.
     graft.ops.Vector.annIndexPersist(spark, sf).collect()
-    val plan = graft.ops.Vector.annIndexPersist(spark, sf)
-      .queryExecution.executedPlan.toString
+    // the scan's Location renders cut at spark.sql.maxMetadataStringLength
+    // (100 chars by default), shorter than the artifact's path
+    val plan = graft.Util.withConf(spark,
+        "spark.sql.maxMetadataStringLength", "1000") {
+      graft.ops.Vector.annIndexPersist(spark, sf)
+        .queryExecution.executedPlan.toString
+    }
     assert(plan.contains("assign.parquet"),
       s"probe must read the persisted assignment:\n${plan.take(1500)}")
   }

@@ -85,8 +85,7 @@ class StreamingSpec extends SparkSuite {
     // image. (Spark 4 refuses in-place commit-log tampering on a
     // checkpoint this session already ran — the clone sidesteps the
     // guard without weakening the scenario.)
-    val key = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir.toString))
+    val key = graft.Artifact.key(dir.toString)
     val root = s"${System.getProperty("java.io.tmpdir")}/graft_stream_" +
       spark.sparkContext.applicationId
     def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
@@ -160,7 +159,7 @@ class StreamingSpec extends SparkSuite {
     // candidate set (a superset of what ever lived in MG state) stays
     // within shards x (1/phi) per batch — independent of |keys| and n
     val candDir = s"${graft.Util.sessionTmpDir(spark, "graft_stream")}/" +
-      s"hh_${java.lang.Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(sf))}/out"
+      s"hh_${graft.Artifact.key(sf)}/out"
     val perBatch = spark.read.parquet(candDir)
       .groupBy(col("batch")).count().collect().map(_.getLong(1))
     assert(perBatch.nonEmpty, "guard: candidate dump must exist")
@@ -216,8 +215,7 @@ class StreamingSpec extends SparkSuite {
     // the processor's occupancy emissions — per cell, the max
     // occupancy equals that cell's delta count (ONE counter per cell
     // is the whole state), and the touched-cell count is bounded by k
-    val key = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sf))
+    val key = graft.Artifact.key(sf)
     val staged = spark.read.parquet(
       s"${graft.Util.sessionTmpDir(spark, "graft_stream")}/annx_$key/out")
     val perCell = staged.groupBy(col("cell"))
@@ -300,8 +298,7 @@ class StreamingSpec extends SparkSuite {
       "recall and CoW reconciliation gates must hold")
     // 3 feed slices at maxFilesPerTrigger=1: the scrub really ran
     // across multiple micro-batches whenever anything was retracted
-    val tag = java.lang.Integer.toHexString(
-      graft.ops.Vector.dataKey(sf).hashCode)
+    val tag = graft.Artifact.key(graft.ops.Vector.dataKey(sf))
     val logDir = new java.io.File(
       s"${graft.Util.sessionTmpDir(spark, "graft_ann_sretract")}/$tag/log")
     val batches = Option(logDir.listFiles()).toSeq.flatten
@@ -325,11 +322,7 @@ class StreamingSpec extends SparkSuite {
     // the serve stream genuinely crossed micro-batches: each of the 3
     // feed slices is non-empty for this query set, and each arrival's
     // top-k lands in its own batch partition of the staged output
-    val key = java.lang.Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(
-        graft.Util.sessionTmpDir(spark, "graft_ann_serve") + "/" +
-          java.lang.Integer.toHexString(
-            graft.ops.Vector.dataKey(sf).hashCode) + "/feed"))
+    val key = graft.Artifact.key(graft.ops.Vector.serveFeedDir(spark, sf))
     val outDir = new java.io.File(
       s"${graft.Util.sessionTmpDir(spark, "graft_stream")}/annserve_$key/out")
     val batches = Option(outDir.listFiles()).toSeq.flatten
@@ -466,7 +459,7 @@ class StreamingSpec extends SparkSuite {
     assert(cBatches.length > 1,
       s"corpus side: expected multiple micro-batches, saw ${cBatches.length}")
     val iBatches = batchesUnder("graft_ann_sreinstate",
-      java.lang.Integer.toHexString(graft.ops.Vector.dataKey(sf).hashCode))
+      graft.Artifact.key(graft.ops.Vector.dataKey(sf)))
     assert(iBatches.length > 1,
       s"index side: expected multiple micro-batches, saw ${iBatches.length}")
     // re-trigger with no new arrivals is a no-op on both sides
